@@ -1,43 +1,22 @@
-"""Seeded input generators for the benchmark.
+"""Seeded input generator for the benchmark.
 
-Every input the program sees is written here from ``--seed`` alone: the
-same seed gives byte-identical files (``test_inputs.py`` checks this).
-The program only ever receives the files.
-
-- ``write_catalog_tables``: the five star-schema tables the catalog
-  workload's entries read (customer, supplier, events, documents,
-  embeddings), in the shape of the committed sf0.1 test data: same
-  schemas, categorical domains, value ranges and structural quirks.
-- ``EventsFeed``: the events feed replayed through
-  ``pipeline.run_incremental``, one landing parquet file per tick.
+``EventsFeed`` writes the events feed replayed through
+``pipeline.run_incremental``, one landing parquet file per tick, from
+``--seed`` alone: the same seed gives byte-identical files
+(``test_inputs.py`` checks this). The program only ever receives the
+files. The catalog workload reads the committed test tables instead
+(see ``workloads.Catalog``).
 """
 
 from __future__ import annotations
 
 import datetime as dt
-import os
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-CATALOG_TABLES = ("customer", "supplier", "events", "documents", "embeddings")
-# sf0.1 row counts of the tables the catalog workload reads
-_BASE_ROWS = {
-    "customer": 15_000,
-    "supplier": 1_000,
-    "events": 100_000,
-    "documents": 5_000,
-    "embeddings": 2_000,
-}
-_MKT_SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
 _EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-# the 31-word vocabulary of the committed documents table
-_VOCAB = np.array(sorted(
-    "a agg batch big column customer data dup fast filter group hash join key "
-    "line merge order part query row scan slow small sort spark stream table "
-    "the value vector window".split()
-))
 
 
 def _write(path: str, table: pa.Table) -> None:
@@ -48,105 +27,33 @@ def _write(path: str, table: pa.Table) -> None:
     )
 
 
-def _us(day: str) -> int:
-    return int(np.datetime64(day).astype("datetime64[us]").astype(np.int64))
-
-
-def write_catalog_tables(out_dir: str, seed: int, sf: float) -> None:
-    """Write customer, supplier, events, documents and embeddings at
-    scale factor ``sf`` into ``out_dir``."""
-    os.makedirs(out_dir, exist_ok=True)
-    rng = np.random.default_rng([seed, 1])
-    n = {k: max(1, int(v * sf / 0.1)) for k, v in _BASE_ROWS.items()}
-
-    keys = np.arange(n["customer"], dtype=np.int64)
-    _write(f"{out_dir}/customer.parquet", pa.table({
-        "c_custkey": keys,
-        "c_name": pa.array([f"Customer#{k:09d}" for k in keys]),
-        "c_nationkey": rng.integers(0, 25, len(keys)).astype(np.int32),
-        "c_acctbal": np.round(rng.uniform(-1000, 10000, len(keys)), 2),
-        "c_mktsegment": pa.array(rng.choice(_MKT_SEGMENTS, len(keys))),
-    }))
-
-    keys = np.arange(n["supplier"], dtype=np.int64)
-    _write(f"{out_dir}/supplier.parquet", pa.table({
-        "s_suppkey": keys,
-        "s_name": pa.array([f"Supplier#{k:09d}" for k in keys]),
-        "s_nationkey": rng.integers(0, 25, len(keys)).astype(np.int32),
-        "s_acctbal": np.round(rng.uniform(-1000, 10000, len(keys)), 2),
-    }))
-
-    ne = n["events"]
-    e0, e1 = _us("2024-01-01"), _us("2024-01-31")
-    _write(f"{out_dir}/events.parquet", pa.table({
-        "event_id": np.arange(ne, dtype=np.int64),
-        "ts": pa.array(rng.integers(e0, e1, ne), type=pa.timestamp("us")),
-        "user_id": rng.integers(0, max(1, int(1500 * sf / 0.1)), ne).astype(np.int64),
-        "event_type": pa.array(rng.choice(_EVENT_TYPES, ne)),
-        "value": np.round(rng.uniform(0, 100, ne), 6),
-        "props": pa.array([f'{{"k": {k}}}' for k in rng.integers(0, 100, ne)]),
-    }))
-
-    nd = n["documents"]
-    lens = rng.integers(10, 101, nd)
-    words = rng.choice(_VOCAB, int(lens.sum()))
-    texts, pos = [], 0
-    for ln in lens:
-        texts.append(" ".join(words[pos : pos + ln]))
-        pos += ln
-    for i in rng.integers(1, nd, max(nd // 650, 1)):  # exact near-clone pairs
-        texts[int(i)] = texts[int(i) - 1]
-    _write(f"{out_dir}/documents.parquet", pa.table({
-        "doc_id": np.arange(nd, dtype=np.int64),
-        "text": pa.array(texts),
-        "lang": pa.array(rng.choice(
-            ["en", "zh", "es", "fr", "de"], nd, p=[0.41, 0.15, 0.15, 0.15, 0.14]
-        )),
-        "source": pa.array([f"src{v}" for v in rng.integers(0, 20, nd)]),
-        "n_chars": np.array([len(t) for t in texts], dtype=np.int64),
-    }))
-
-    nv = n["embeddings"]
-    labels = rng.integers(0, 10, nv).astype(np.int32)
-    centers = rng.normal(0, 0.2, (10, 64))
-    vecs = centers[labels] + rng.normal(0, 1.0, (nv, 64))
-    vecs = (vecs / np.linalg.norm(vecs, axis=1, keepdims=True)).astype(np.float32)
-    _write(f"{out_dir}/embeddings.parquet", pa.table({
-        "vec_id": np.arange(nv, dtype=np.int64),
-        "embedding": pa.FixedSizeListArray.from_arrays(
-            pa.array(vecs.reshape(-1)), 64
-        ).cast(pa.list_(pa.float32())),
-        "label": labels,
-    }))
-
-
 class EventsFeed:
     """A seeded replay of the raw events feed, one landing file per tick.
 
-    Tick ``k`` covers event time ``(as_of(k-1), as_of(k)]``. Every tick
-    after the first admits ``admit`` new tenants, so each later tick runs
-    both the catchup pass (tenants without a watermark) and the general
-    pass, and all ticks past the first have the same shape. A share
-    of each tick's events is delivered twice in the same file (intra-batch
-    dedup), and a small share arrives behind its tenant's watermark (the
-    window filter drops them). The generator tracks each tenant's
+    Tick ``k`` covers event time ``(as_of(k-1), as_of(k)]``. The first
+    tick lands ``INITIAL`` of the ``TENANTS`` tenants; every later tick
+    admits ``ADMIT`` new ones, so each later tick runs both the catchup
+    pass (tenants without a watermark) and the general pass, and all
+    ticks past the first have the same shape. A share of each tick's
+    events is delivered twice in the same file (intra-batch dedup), and
+    a small share arrives behind its tenant's watermark (the window
+    filter drops them). The generator tracks each tenant's
     watermark, so it knows exactly which rows must land and what every
     watermark must read afterwards.
     """
 
     START = dt.datetime(2024, 3, 1)
     TICK = dt.timedelta(minutes=15)
+    TENANTS = 1500
+    INITIAL = 1000
+    ADMIT = 20
+    ROWS_PER_TICK = 3300
+    DUP_SHARE = 0.05  # delivered twice in the same file
+    LATE_SHARE = 0.01  # behind the tenant's watermark
 
-    def __init__(self, seed: int, tenants: int = 1500, initial: int = 1000,
-                 admit: int = 20, rows_per_tick: int = 3300,
-                 dup_share: float = 0.05, late_share: float = 0.01):
+    def __init__(self, seed: int):
         self.rng = np.random.default_rng([seed, 2])
-        self.tenants = tenants
-        self.active = initial
-        self.admit = admit
-        self.rows_per_tick = rows_per_tick
-        self.dup_share = dup_share
-        self.late_share = late_share
+        self.active = self.INITIAL
         self.tick = 0
         self.next_event_id = 0
         self.watermark: dict[int, int] = {}  # tenant -> max landed ts (µs)
@@ -163,9 +70,9 @@ class EventsFeed:
         rng, k = self.rng, self.tick
         before = self.active
         if k:
-            self.active = min(self.tenants, self.active + self.admit)
+            self.active = min(self.TENANTS, self.active + self.ADMIT)
         lo, hi = self._as_of_us(k - 1), self._as_of_us(k)
-        n = self.rows_per_tick
+        n = self.ROWS_PER_TICK
         # the newly admitted tenants each get a row, so they land this tick
         new = np.arange(before, self.active)
         users = np.concatenate([
@@ -177,7 +84,7 @@ class EventsFeed:
         # late rows: behind the watermark the tick reads (the one left by
         # earlier ticks), so no window ever admits them
         seen = np.array(sorted(self.watermark), dtype=np.int64)
-        n_late = int(n * self.late_share) if len(seen) else 0
+        n_late = int(n * self.LATE_SHARE) if len(seen) else 0
         late_users = rng.choice(seen, n_late) if n_late else np.zeros(0, np.int64)
         late_ts = np.array(
             [self.watermark[u] - int(rng.integers(1, 6 * 3600 * 10**6))
@@ -193,7 +100,7 @@ class EventsFeed:
         all_ids = np.concatenate([ids, late_ids])
         all_users = np.concatenate([users, late_users])
         all_ts = np.concatenate([ts, late_ts])
-        dup = rng.choice(n, int(n * self.dup_share), replace=False)
+        dup = rng.choice(n, int(n * self.DUP_SHARE), replace=False)
         order = np.concatenate([np.arange(len(all_ids)), dup])
         m = len(all_ids)
         etype = rng.choice(_EVENT_TYPES, m)

@@ -10,9 +10,9 @@ Operations run back-to-back until their timed seconds reach
 ``--seconds`` and the workload's minimum sample count (``MIN_OPS``).
 ``--trace 0`` measures the end-to-end metrics with no tracing installed;
 ``--trace 1`` is the separate traced run that gives the per-layer
-metrics and writes its spans to ``.perfbench_out/``. Inputs are
-generated from ``--seed`` (see ``gen.py``). The last line of standard
-output is one JSON object; the line before it is a human-readable
+metrics and writes its spans to ``.perfbench_out/``. The events feed
+is generated from ``--seed`` (see ``gen.py``); the catalog reads the
+committed sf0.01 test tables. The last line of standard output is one JSON object; the line before it is a human-readable
 summary. The exit code is non-zero when an operation fails or a
 correctness check does not hold.
 """

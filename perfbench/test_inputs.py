@@ -1,4 +1,4 @@
-"""The benchmark's inputs depend on the seed alone.
+"""The generated events feed depends on the seed alone.
 
 Run from the repository root: ``python3 -m pytest perfbench/test_inputs.py -q``
 """
@@ -20,18 +20,17 @@ def _digest(root: str) -> dict[str, str]:
 
 
 def _write_inputs(root: str, seed: int) -> dict[str, str]:
-    gen.write_catalog_tables(os.path.join(root, "tables"), seed, 0.01)
     feed = gen.EventsFeed(seed)
-    os.makedirs(os.path.join(root, "feed"))
+    os.makedirs(root)
     for k in range(4):
-        feed.write_tick(os.path.join(root, "feed", f"tick_{k:05d}.parquet"))
+        feed.write_tick(os.path.join(root, f"tick_{k:05d}.parquet"))
     return _digest(root)
 
 
 def test_same_seed_gives_byte_identical_inputs(tmp_path):
     a = _write_inputs(str(tmp_path / "a"), 7)
     b = _write_inputs(str(tmp_path / "b"), 7)
-    assert len(a) == 9
+    assert len(a) == 4
     assert a == b
 
 
@@ -55,7 +54,7 @@ def test_events_feed_bookkeeping(tmp_path):
         rows.append(pq.read_table(path))
         active.append(feed.active)
     assert active == [1000, 1020, 1040]
-    assert feed.expected_rows == 3 * feed.rows_per_tick
+    assert feed.expected_rows == 3 * feed.ROWS_PER_TICK
     for t in rows:
         ids = t.column("event_id").to_pylist()
         assert len(ids) > len(set(ids))  # intra-batch duplicates

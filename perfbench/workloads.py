@@ -42,8 +42,8 @@ class IngestTicks:
     tick, ticks back-to-back with no release between them."""
 
     name = "ingest_ticks"
-    WARMUP_TICKS = 2
-    MIN_OPS = 5
+    WARMUP_TICKS = 3
+    MIN_OPS = 8
 
     def __init__(self, spark, root: str, seed: int):
         from backend_etl_spark.sink import WatermarkStore
@@ -73,6 +73,7 @@ class IngestTicks:
         as_of = self.feed.write_tick(f"{self.src}/tick_{k:05d}.parquet")
         tracer = self.tracer
         if tracer is not None:
+            rdds_before = _persistent_rdds(self.spark)
             tracer.begin(k)
         t0 = time.perf_counter()
         source = self.spark.read.parquet(self.src)
@@ -91,7 +92,8 @@ class IngestTicks:
                 "sink.rows_appended": sum(s["rows"] for s in write),
                 "watermark.advance_s": _span_s(adv),
                 "watermark.read_s": _span_s(read),
-                "session.leaked_rdds": _persistent_rdds(self.spark),
+                # ticks release nothing, so count this tick's own leak only
+                "session.leaked_rdds": _persistent_rdds(self.spark) - rdds_before,
                 "in_window_rows": self.feed.expected_rows - before,
             })
             self.records.append(rec)
@@ -143,15 +145,16 @@ class IngestTicks:
 class Catalog:
     """Passes over a fixed list of catalog entries, each timed as
     ``REGISTRY[name].fn`` plus a noop write, the way ``bench.py`` times
-    them. Every pass, the warm-up included, reads its own copy of the
-    tables, so per-process fit memos miss as on a fresh snapshot. Between
-    entries, outside timing, the result is hashed and compared with its
-    DuckDB oracle, then the persistent RDDs it leaked are released (the
-    documented caller contract)."""
+    them. The input is the committed, read-only sf0.01 test tables
+    (TESTDATA.md), so the seed does not change it. Every pass, the
+    warm-up included, reads its own copy of them, so per-process fit
+    memos miss as on a fresh snapshot. Between entries, outside timing,
+    the result is hashed and compared with its DuckDB oracle, then the
+    persistent RDDs it leaked are released (the documented caller
+    contract)."""
 
     name = "catalog"
     MIN_OPS = 1
-    SF = 0.01
     ENTRIES = (
         "dedup_semantic_semdedup",
         "geo_nearest_supplier_binned",
@@ -159,10 +162,14 @@ class Catalog:
     )
 
     def __init__(self, spark, root: str, seed: int):
+        from __spark_entry__ import SMOKE_SF_DIR
+
         self.spark = spark
+        # the committed correctness-scale tables sit next to the smoke tables
+        self.tables = os.path.join(os.path.dirname(SMOKE_SF_DIR), "sf0.01")
+        if not os.path.isdir(self.tables):
+            raise FileNotFoundError(f"committed test tables not found: {self.tables}")
         self.root = root
-        self.tables = f"{root}/tables"
-        gen.write_catalog_tables(self.tables, seed, self.SF)
         self.passes = 0
         self.tracer = None
         self.records: list[dict] = []
@@ -171,24 +178,23 @@ class Catalog:
         self.hashes: dict[str, set] = {e: set() for e in self.ENTRIES}
 
     def setup(self) -> None:
-        """Two warm-up passes: the JVM, Python workers and codegen keep
-        warming up over the first two. The first is not checked; the
-        second is, so results are compared across at least two passes."""
-        self.op(check=False)
+        """One cold warm-up pass, checked like the timed ones, so results
+        are compared across at least two passes."""
         self.op()
         for t in self.timings.values():
             t.clear()
 
-    def op(self, check: bool = True) -> float:
+    def op(self) -> float:
         import duckdb
         from backend_etl_spark.attest import dist_hash_compare
         from backend_etl_spark.catalog import REGISTRY
         from backend_etl_spark.session import release_all_persistent
+        from backend_etl_spark.sources.loader import TABLES
 
         tables = f"{self.root}/pass_{self.passes:03d}"
         shutil.copytree(self.tables, tables)
         con = duckdb.connect()
-        for t in gen.CATALOG_TABLES:
+        for t in TABLES:
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{tables}/{t}.parquet')")
         self.passes += 1
         total = 0.0
@@ -209,13 +215,12 @@ class Catalog:
                 rec.update({"entry": name, "build_s": t1 - t0, "exec_s": t2 - t1,
                             "session.leaked_rdds": _persistent_rdds(self.spark)})
                 self.records.append(rec)
-            if check:
-                verdict = dist_hash_compare(df, con, REGISTRY[name].oracle)
-                if not (verdict["schema_ok"] and verdict["count_ok"] and verdict["vals_ok"]):
-                    self.fails.append(f"{name} pass {self.passes} differs from its oracle: "
-                                      f"{verdict['n_spark']} vs {verdict['n_oracle']} rows")
-                s = verdict["spark"]
-                self.hashes[name].add((s["n"], s["h1"], s["h2"]))
+            verdict = dist_hash_compare(df, con, REGISTRY[name].oracle)
+            if not (verdict["schema_ok"] and verdict["count_ok"] and verdict["vals_ok"]):
+                self.fails.append(f"{name} pass {self.passes} differs from its oracle: "
+                                  f"{verdict['n_spark']} vs {verdict['n_oracle']} rows")
+            s = verdict["spark"]
+            self.hashes[name].add((s["n"], s["h1"], s["h2"]))
             release_all_persistent(self.spark)
         con.close()
         shutil.rmtree(tables)
